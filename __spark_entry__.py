@@ -33,6 +33,7 @@ from webextract.functions.similarity import (
     lsh_ann_topk,
     near_duplicate_pairs,
 )
+from webextract.functions.stage import stage
 from webextract.functions.text import with_text_features
 from webextract.pipeline import PipelineOptions, extract_dataframe, plan_todo, ship_package
 
@@ -75,16 +76,14 @@ _SHINGLE_SQL = f"""
 # this is a no-op (no added exchange). Partition count per (path, width)
 # is probed once per process; values are row-identical either way (every
 # query here is order-insensitive).
-_SCAN_PARTS: dict[str, int] = {}
+_SCAN_PARTS: dict[tuple[str, int], int] = {}
 
 
 def _spread(df: DataFrame, key: str) -> DataFrame:
-    spark = df.sparkSession
-    dp = spark.sparkContext.defaultParallelism
-    n = _SCAN_PARTS.get(key)
+    dp = df.sparkSession.sparkContext.defaultParallelism
+    n = _SCAN_PARTS.get((key, dp))
     if n is None:
-        n = df.rdd.getNumPartitions()
-        _SCAN_PARTS[key] = n
+        n = _SCAN_PARTS[(key, dp)] = df.rdd.getNumPartitions()
     return df.repartition(dp) if n < dp else df
 
 
@@ -276,9 +275,9 @@ def _increment_inputs(spark, sf_dir):
                                    F.lit(" extra near dup tail words here")))
                    .otherwise(F.col("s.text")).alias("text")))
     # dedup_increment consumes the new batch twice (fingerprints +
-    # text semi-join); without a cut the fixture join re-executes per
+    # text semi-join); unstaged, the fixture join re-executes per
     # reference
-    return new.localCheckpoint(eager=False), committed
+    return stage(new), committed
 
 
 def q_dedup_increment(spark, sf_dir):

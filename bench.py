@@ -430,7 +430,6 @@ def dedup_stage_runs(spark, timings: dict[str, float]) -> None:
     production shape (signatures/candidates are stored columns at scale,
     computed once per corpus snapshot, not re-derived per consumer)."""
     import __spark_entry__ as entrymod
-    from webextract.functions.cache import cache_scope
     from webextract.functions.curate import curate_corpus
     from webextract.functions.dedup import (
         duplicate_groups, lsh_candidate_pairs, near_duplicate_docs,
@@ -452,25 +451,19 @@ def dedup_stage_runs(spark, timings: dict[str, float]) -> None:
     sig = stage("minhash_signatures",
                 lambda: entrymod.with_minhash(corpus).localCheckpoint())
     cands = stage("lsh_candidates",
-                  lambda: lsh_candidate_pairs(
-                      sig, persist_bands=False).localCheckpoint())
-    with cache_scope() as qscope:
-        pairs = stage("near_dup_docs",
-                      lambda: near_duplicate_docs(
-                          corpus, threshold=0.8, candidates=cands,
-                          scope=qscope).localCheckpoint())
-    with cache_scope() as qscope:
-        timings["dup_groups"] = _timed(lambda: noop_write(
-            duplicate_groups(pairs, scope=qscope)))
-    with cache_scope() as qscope:
-        timings["curated_docs"] = _timed(lambda: noop_write(
-            curate_corpus(corpus, min_quality=0.5, threshold=0.8,
-                          candidates=cands, pairs=pairs, scope=qscope)))
-    with cache_scope() as qscope:
-        timings["curated_docs_transitive"] = _timed(lambda: noop_write(
-            curate_corpus(corpus, min_quality=0.5, threshold=0.8,
-                          candidates=cands, pairs=pairs, transitive=True,
-                          scope=qscope)))
+                  lambda: lsh_candidate_pairs(sig).localCheckpoint())
+    pairs = stage("near_dup_docs",
+                  lambda: near_duplicate_docs(
+                      corpus, threshold=0.8,
+                      candidates=cands).localCheckpoint())
+    timings["dup_groups"] = _timed(lambda: noop_write(
+        duplicate_groups(pairs)))
+    timings["curated_docs"] = _timed(lambda: noop_write(
+        curate_corpus(corpus, min_quality=0.5, threshold=0.8,
+                      candidates=cands, pairs=pairs)))
+    timings["curated_docs_transitive"] = _timed(lambda: noop_write(
+        curate_corpus(corpus, min_quality=0.5, threshold=0.8,
+                      candidates=cands, pairs=pairs, transitive=True)))
     for name in DEDUP_STAGES:
         print(f"[bench] {name} (staged): {timings[name]}s", file=sys.stderr)
 
@@ -604,8 +597,8 @@ def write_bench_md(scaling: dict, timings: dict[str, float]) -> None:
         "dup_groups / curated_docs) is timed as the staged pipeline it is "
         "in production: each stage consumes the previous stage's "
         "materialized output instead of re-deriving shingles from "
-        "scratch, and per-query caches are released through cache_scope "
-        "after each measurement:",
+        "scratch; the operators' own stage tables are lineage cuts "
+        "(functions/stage.py), freed by Spark's ContextCleaner:",
         "",
         "| query | sec |",
         "|---|---|",

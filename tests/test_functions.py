@@ -20,6 +20,7 @@ from webextract.functions.dedup import (
 )
 from webextract.functions.multimodal import media_features
 from webextract.functions.similarity import knn_bruteforce, lsh_ann_topk
+from webextract.functions.stage import stage
 from webextract.functions.text import with_text_features
 
 
@@ -925,20 +926,17 @@ def test_curate_corpus_stages(spark):
 
 
 def test_duplicate_groups_transitive(spark):
-    from webextract.functions.cache import cache_scope
     from webextract.functions.dedup import duplicate_groups
 
     pairs = spark.createDataFrame([
         Row(doc_a=3, doc_b=7), Row(doc_a=7, doc_b=9),   # chain 3~7~9
         Row(doc_a=20, doc_b=21),                        # disjoint pair
     ])
-    with cache_scope() as scope:
-        out = {r["doc_id"]: r["group_id"]
-               for r in duplicate_groups(pairs, scope=scope).collect()}
+    out = {r["doc_id"]: r["group_id"]
+           for r in duplicate_groups(pairs).collect()}
     assert out == {3: 3, 7: 3, 9: 3, 20: 20, 21: 20}
     # empty input -> empty grouping, no crash
-    with cache_scope() as scope:
-        assert duplicate_groups(pairs.limit(0), scope=scope).count() == 0
+    assert duplicate_groups(pairs.limit(0)).count() == 0
 
 
 def test_curate_corpus_transitive_vs_greedy(spark):
@@ -968,7 +966,6 @@ def test_curate_corpus_transitive_vs_greedy(spark):
 
 
 def test_curate_corpus_staged_candidates_match_fused(spark):
-    from webextract.functions.cache import cache_scope
     from webextract.functions.curate import curate_corpus
     from webextract.functions.dedup import lsh_candidate_pairs, with_minhash
 
@@ -983,27 +980,20 @@ def test_curate_corpus_staged_candidates_match_fused(spark):
         Row(doc_id=4, text="ab cd"),
     ]
     docs = spark.createDataFrame(rows)
-    with cache_scope() as scope:
-        fused = sorted(r["doc_id"] for r in curate_corpus(
-            docs, min_quality=0.3, threshold=0.8, scope=scope).collect())
+    fused = sorted(r["doc_id"] for r in curate_corpus(
+        docs, min_quality=0.3, threshold=0.8).collect())
     # production shape: corpus-level candidates precomputed once, fed in
-    with cache_scope() as scope:
-        cands = scope.persist(lsh_candidate_pairs(
-            with_minhash(docs), persist_bands=False))
-        staged = sorted(r["doc_id"] for r in curate_corpus(
-            docs, min_quality=0.3, threshold=0.8, candidates=cands,
-            scope=scope).collect())
+    cands = stage(lsh_candidate_pairs(with_minhash(docs)))
+    staged = sorted(r["doc_id"] for r in curate_corpus(
+        docs, min_quality=0.3, threshold=0.8, candidates=cands).collect())
     assert staged == fused == [1]
     # deepest staging: corpus-level VERIFIED pairs fed in, verification
     # skipped entirely — identical survivors
     from webextract.functions.dedup import near_duplicate_docs
 
-    with cache_scope() as scope:
-        pairs = scope.persist(near_duplicate_docs(
-            docs, threshold=0.8, scope=scope))
-        via_pairs = sorted(r["doc_id"] for r in curate_corpus(
-            docs, min_quality=0.3, threshold=0.8, pairs=pairs,
-            scope=scope).collect())
+    pairs = stage(near_duplicate_docs(docs, threshold=0.8))
+    via_pairs = sorted(r["doc_id"] for r in curate_corpus(
+        docs, min_quality=0.3, threshold=0.8, pairs=pairs).collect())
     assert via_pairs == fused
 
 
@@ -1011,7 +1001,6 @@ def test_dedup_increment_rules(spark):
     """Incremental snapshot dedup, each rule pinned: corpus exact dup,
     corpus near dup, in-batch exact dup (keep-lowest), in-batch near dup
     (keep-lowest), fresh doc survives; corpus docs are never emitted."""
-    from webextract.functions.cache import cache_scope
     from webextract.functions.dedup import dedup_increment
 
     base = ("the quick brown fox jumps over the lazy dog and runs through "
@@ -1034,15 +1023,12 @@ def test_dedup_increment_rules(spark):
         Row(doc_id=17, text=other),                      # in-batch exact dup
         Row(doc_id=19, text=other.rsplit(" ", 1)[0] + " zzz"),  # near of 15
     ])
-    with cache_scope() as scope:
-        out = sorted(r["doc_id"] for r in
-                     dedup_increment(new, corpus, scope=scope).collect())
+    out = sorted(r["doc_id"] for r in
+                 dedup_increment(new, corpus).collect())
     assert out == [15]
     # in-batch keep-lowest: with 15 absent, 17 would have survived
-    with cache_scope() as scope:
-        out2 = sorted(r["doc_id"] for r in dedup_increment(
-            new.filter(F.col("doc_id") != 15), corpus,
-            scope=scope).collect())
+    out2 = sorted(r["doc_id"] for r in dedup_increment(
+        new.filter(F.col("doc_id") != 15), corpus).collect())
     assert out2 == [17]
     # precomputed corpus stage tables (the at-scale shape) give the
     # same answer without touching corpus text for signatures
@@ -1053,54 +1039,77 @@ def test_dedup_increment_rules(spark):
                                                  "UTF-8"))
                         .alias("fingerprint"))
     csig = with_minhash(corpus)
-    with cache_scope() as scope:
-        out3 = sorted(r["doc_id"] for r in dedup_increment(
-            new, corpus, corpus_fingerprints=cfp, corpus_signatures=csig,
-            scope=scope).collect())
+    out3 = sorted(r["doc_id"] for r in dedup_increment(
+        new, corpus, corpus_fingerprints=cfp,
+        corpus_signatures=csig).collect())
     assert out3 == [15]
 
 
-def test_curate_full_stage_path_matches_local_checkpoint(spark, tmp_path):
-    """The distributed-safe clean-stage materialization (stage_path →
-    durable parquet, recomputable after executor loss) must produce the
-    same survivors as the local benchmarking default (localCheckpoint),
-    and must actually write the stage table."""
+STAGE_MODE_QUERIES = {  # case -> (__spark_entry__ query, kwargs)
+    "curate_full": ("q_curate_full", {}),
+    "curate_full_approx": ("q_curate_full", {"budget_mode": "approx"}),
+    "dedup_increment": ("q_dedup_increment", {}),
+    "curated_docs_transitive": ("q_curated_docs_transitive", {}),
+}
+
+
+@pytest.mark.parametrize("query", sorted(STAGE_MODE_QUERIES))
+def test_stage_modes_row_identical(spark, tmp_path, query):
+    """Each composed chain returns the same rows with its stage tables
+    as executor-local checkpoints (``spark.webextract.stageDir`` unset)
+    and as durable parquet tables under the stage directory — and the
+    durable mode really writes them there."""
     import __spark_entry__ as entrymod
-    from webextract.functions.curate import curate_full
+    from webextract.functions.stage import STAGE_DIR_CONF
 
-    sf_dir = "/root/testdata/sf0.001"
-    docs = entrymod._crawl_corpus(spark, sf_dir)
-    bench = entrymod._docs(spark, sf_dir).filter(
-        F.col("doc_id") % 13 == 0).select(
-        F.array_join(
-            F.slice(F.split(F.trim(F.regexp_replace("text", r"\s+", " ")),
-                            " "), 1, 12), " ").alias("text"))
-    blocked = spark.sql("SELECT 'spam.seofarm.net' AS domain")
-
-    base = sorted(
-        tuple(r) for r in curate_full(
-            docs, blocked, bench, min_quality=0.5, threshold=0.8,
-            budget_tokens=3000).collect())
-    stage = str(tmp_path / "clean_stage")
-    staged = sorted(
-        tuple(r) for r in curate_full(
-            docs, blocked, bench, min_quality=0.5, threshold=0.8,
-            budget_tokens=3000, stage_path=stage).collect())
-    assert staged == base and len(base) > 0
-    # the stage table is a real durable parquet dataset, re-readable
-    clean = spark.read.parquet(stage)
-    assert clean.count() > 0 and "text" in clean.columns
+    fn, kwargs = STAGE_MODE_QUERIES[query]
+    stage_dir = tmp_path / "stages"
+    rows = {}
+    try:
+        for mode in ("local", "durable"):
+            if mode == "local":
+                spark.conf.unset(STAGE_DIR_CONF)
+            else:
+                spark.conf.set(STAGE_DIR_CONF, str(stage_dir))
+            rows[mode] = sorted(tuple(r) for r in getattr(entrymod, fn)(
+                spark, "/root/testdata/sf0.001", **kwargs).collect())
+    finally:
+        spark.conf.unset(STAGE_DIR_CONF)
+    assert rows["durable"] == rows["local"] and len(rows["local"]) > 0
+    assert list(stage_dir.glob("*/*.parquet"))
 
 
-def test_cache_scope_releases(spark):
-    from webextract.functions.cache import cache_scope
+def test_scan_parts_memo_keyed_by_width():
+    """The scan-partition memo must not carry a count probed under one
+    session width over to another: the same single-file input splits
+    into more partitions in a wider session."""
+    from types import SimpleNamespace
 
-    df = spark.range(10)
-    with cache_scope() as scope:
-        cached = scope.persist(df)
-        cached.count()
-        assert cached.storageLevel.useMemory
-    assert not cached.storageLevel.useMemory  # released on exit
+    import __spark_entry__ as entrymod
+
+    class _Frame:  # the slice of DataFrame that _spread touches
+        def __init__(self, width, parts):
+            self.sparkSession = SimpleNamespace(
+                sparkContext=SimpleNamespace(defaultParallelism=width))
+            self.rdd = SimpleNamespace(getNumPartitions=lambda: parts)
+
+        def repartition(self, n):
+            return ("spread", n)
+
+    key = "stub://single-file-table"
+    try:
+        narrow = _Frame(width=1, parts=1)
+        assert entrymod._spread(narrow, key) is narrow
+        # the wide session's scan already has one split per core: no
+        # spread (a width-blind memo would reuse the 1 and respread)
+        wide = _Frame(width=8, parts=8)
+        assert entrymod._spread(wide, key) is wide
+        # and a wide scan that really is narrow still gets spread
+        assert entrymod._spread(_Frame(width=4, parts=1), key) == (
+            "spread", 4)
+    finally:
+        for k in [k for k in entrymod._SCAN_PARTS if k[0] == key]:
+            del entrymod._SCAN_PARTS[k]
 
 
 def test_near_duplicate_pairs_lsh_subset_of_exact(spark):
@@ -1200,15 +1209,11 @@ def test_near_duplicate_docs_composed(docs):
     # shingle/signature stage across consumers instead of recomputing it)
     from webextract.functions.dedup import lsh_candidate_pairs, with_minhash
 
-    sig = with_minhash(docs).persist()
-    try:
-        cands = lsh_candidate_pairs(sig, persist_bands=False)
-        staged = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-                  for r in near_duplicate_docs(
-                      docs, threshold=0.5, candidates=cands).collect()}
-        assert staged == out
-    finally:
-        sig.unpersist()
+    cands = lsh_candidate_pairs(stage(with_minhash(docs)))
+    staged = {(r["doc_a"], r["doc_b"]): r["jaccard"]
+              for r in near_duplicate_docs(
+                  docs, threshold=0.5, candidates=cands).collect()}
+    assert staged == out
 
 
 def test_png_bomb_guard_rejects_before_inflate():
@@ -1797,6 +1802,24 @@ def test_token_budget_precomputed_n_tokens_col(spark):
         assert via_text.exceptAll(via_col).count() == 0
         assert via_col.exceptAll(via_text).count() == 0
         assert via_col.count() > 0
+
+
+@pytest.mark.parametrize("mode", ["exact", "approx"])
+def test_token_budget_null_n_tokens_counts_as_zero(spark, mode):
+    # a NULL precomputed count is 0 tokens: it neither blanks the
+    # running sum (which would drop the doc at the cum_tokens <= budget
+    # gate) nor leaks a NULL n_tokens into the output
+    from webextract.functions.hygiene import token_budget_sample
+
+    docs = spark.createDataFrame(
+        [(1, "a", 0.9, None), (2, "a", 0.8, 5), (3, "a", 0.7, 10),
+         (4, "b", 0.5, 4), (5, "b", 0.4, None)],
+        "doc_id long, src string, prio double, nt long")
+    out = sorted(tuple(r) for r in token_budget_sample(
+        docs, budget_tokens=12, strata_col="src", priority_col="prio",
+        mode=mode, n_tokens_col="nt").collect())
+    assert out == [(1, "a", 0, 0), (2, "a", 5, 5),
+                   (4, "b", 4, 4), (5, "b", 0, 4)]
 
 
 def test_token_budget_approx_matches_exact(spark):

@@ -56,13 +56,7 @@ def test_every_oracle_key_has_a_query():
 @pytest.mark.parametrize("name", sorted(ORACLE))
 def test_parity(spark, duck, name):
     sdf = QUERIES[name](spark, SF_DIR)
-    try:
-        srows = sdf.collect()
-    finally:
-        # composed queries persist shared relations under the session-
-        # scope contract; release them between parametrized cases so the
-        # shared test session's heap stays flat across 30+ queries
-        spark.catalog.clearCache()
+    srows = sdf.collect()
     scols = sdf.columns
     res = duck.execute(ORACLE[name]).fetchall()
     dcols = [d[0] for d in duck.description]

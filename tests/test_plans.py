@@ -242,3 +242,46 @@ def test_text_features_shared_arrays_single_evaluation(spark, docs):
     assert len(re.findall(r"split\(norm", optimized)) == 1       # _toks
     assert len(re.findall(r"split\(text", optimized)) == 1       # _lines
     assert len(re.findall(r"aggregate\(", optimized)) == 1       # _top2
+
+
+def test_curate_full_decontam_explodes_distinct_grams(spark, monkeypatch):
+    # both sides of curate_full's decontamination semi-join explode a
+    # per-doc DISTINCT 8-gram set, as decontaminate() does: repeated
+    # boilerplate grams must not multiply the join input. The clean
+    # stage's input frame is captured on its way into stage(), since
+    # the stage cut hides it from the final plan.
+    import __spark_entry__ as entrymod
+    from webextract.functions import curate
+
+    staged = []
+    real_stage = curate.stage
+    monkeypatch.setattr(
+        curate, "stage",
+        lambda df, **kw: staged.append(df) or real_stage(df, **kw))
+    entrymod.q_curate_full(spark, SF)
+    clean = staged[0]._jdf.queryExecution().optimizedPlan().toString()
+    gens = [ln for ln in clean.splitlines() if "Generate explode(" in ln]
+    assert len(gens) == 2, gens
+    assert all("Generate explode(array_distinct(" in ln for ln in gens), gens
+
+
+# physical-plan text size (characters) of the composed chains at sf0.001:
+# each bound is 1.5x the measured size (5270 / 6369 / 7494 on local[4]).
+# The regressions this guards against — a persist or a missing lineage
+# cut dragging the producer's whole tree into every reference — were
+# 40-150x.
+PLAN_TEXT_BOUNDS = {  # case -> (__spark_entry__ query, kwargs, bound)
+    "curate_full": ("q_curate_full", {}, 7905),
+    "curate_full_approx": ("q_curate_full", {"budget_mode": "approx"}, 9553),
+    "dedup_increment": ("q_dedup_increment", {}, 11241),
+}
+
+
+@pytest.mark.parametrize("query", sorted(PLAN_TEXT_BOUNDS))
+def test_composed_chain_plan_text_bounded(spark, query):
+    import __spark_entry__ as entrymod
+
+    fn, kwargs, bound = PLAN_TEXT_BOUNDS[query]
+    df = getattr(entrymod, fn)(spark, SF, **kwargs)
+    size = len(df._jdf.queryExecution().executedPlan().toString())
+    assert size <= bound, size

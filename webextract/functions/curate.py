@@ -29,19 +29,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .cache import CacheScope, resolve
 from .dedup import duplicate_groups, near_duplicate_docs
+from .stage import stage
 from .text import with_text_features
 
 
 def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", min_quality: float = 0.3,
                   threshold: float = 0.8,
-                  persist_survivors: bool = True,
                   candidates: DataFrame | None = None,
                   pairs: DataFrame | None = None,
-                  transitive: bool = False,
-                  scope: CacheScope | None = None) -> DataFrame:
+                  transitive: bool = False) -> DataFrame:
     """corpus → surviving documents after quality + exact + near-dup.
 
     Returns (id, n_tokens, quality_score, fingerprint) for every
@@ -61,28 +59,22 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
     results are identical. ``pairs`` wins when both are given (it skips
     verification entirely).
 
-    ``persist_survivors`` materializes the exact-dedup survivor set,
+    Two stage tables (:func:`~webextract.functions.stage.stage`) cut
+    the lineage: the feature stage and the exact-dedup survivor set,
     which the near-dup stage consumes THREE times (shingle derivation,
-    pair verification, final anti-join) — without it the whole
+    pair verification, final anti-join) — unstaged, the whole
     feature+dedup subtree recomputes per consumer (measured ~3x wall on
-    the fused plan). Release contract is ``scope``
-    (:mod:`webextract.functions.cache`): ``scope=None`` leaves caches to
-    session teardown (one-shot jobs); long-lived sessions pass a
-    ``cache_scope()`` and release after the consuming action.
+    the fused plan).
     """
-    sc = resolve(scope)
-    feats = with_text_features(docs).select(
-        id_col, text_col, "n_tokens", "quality_score", "fingerprint")
-    if persist_survivors:
-        # materialize the feature stage BEFORE the quality filter: a
-        # deterministic filter is otherwise pushed below the feature
-        # projections, substituting the full quality expression —
-        # including the top-2-gram sort + aggregate fold, which the
-        # filter condition then re-evaluates per reference — into the
-        # scan (measured 8× the feature cost at sf0.1). At 10^12 docs
-        # features are a stored per-snapshot stage table exactly like
-        # signatures/candidates; this persist is its local stand-in.
-        feats = sc.persist(feats)
+    # stage the features BEFORE the quality filter: a deterministic
+    # filter is otherwise pushed below the feature projections,
+    # substituting the full quality expression — including the
+    # top-2-gram sort + aggregate fold, which the filter condition then
+    # re-evaluates per reference — into the scan (measured 8× the
+    # feature cost at sf0.1). At 10^12 docs features are a stored
+    # per-snapshot stage table exactly like signatures/candidates.
+    feats = stage(with_text_features(docs).select(
+        id_col, text_col, "n_tokens", "quality_score", "fingerprint"))
     passing = feats.filter(F.col("quality_score") >= min_quality)
     # exact dedup keep-first: the min id per fingerprint survives.
     # Deliberately groupBy(min) + semi-join rather than a window-min:
@@ -93,23 +85,16 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
     # corpus scale the narrow agg + id-keyed join still beats sorting
     # text rows.
     keep = passing.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-    exact_survivors = passing.join(
-        keep.select(id_col), id_col, "left_semi")
-    if persist_survivors:
-        # lineage CUT, not persist (the dedup_increment lesson,
-        # dedup.py:448): the near-dup verify chain below references this
-        # relation many times (shingle semi-join, band sides, verify
-        # join, final anti-join), and an InMemoryRelation keeps the
-        # whole analyzed feature tree as its child — every reference
-        # re-analyzes it, and the composed curate_full plan measured
-        # 407 KB (exact) / 1.9 MB (approx) of physical-plan text with
-        # driver analysis dominating wall time. The checkpoint makes
-        # each reference a constant-size leaf. At cluster scale the
-        # equivalent is the stored exact-survivor stage table
-        # (curate_full's ``stage_path`` seam covers the durable shape).
-        exact_survivors = exact_survivors.select(
-            id_col, text_col, "n_tokens", "quality_score", "fingerprint") \
-            .localCheckpoint(eager=False)
+    # staged, not persisted: the near-dup verify chain below references
+    # this relation many times (shingle semi-join, band sides, verify
+    # join, final anti-join), and an InMemoryRelation keeps the whole
+    # analyzed feature tree as its child — every reference re-analyzes
+    # it, and the composed curate_full plan measured 407 KB (exact) /
+    # 1.9 MB (approx) of physical-plan text with driver analysis
+    # dominating wall time. The stage makes each reference a
+    # constant-size leaf.
+    exact_survivors = stage(passing.join(
+        keep.select(id_col), id_col, "left_semi"))
     def _narrow(rel: DataFrame) -> DataFrame:
         ids = exact_survivors.select(F.col(id_col).alias("_sid"))
         return (
@@ -125,12 +110,12 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
         pairs = near_duplicate_docs(
             exact_survivors.select(F.col(id_col), F.col(text_col)),
             id_col=id_col, text_col=text_col, threshold=threshold,
-            candidates=candidates, scope=sc)
+            candidates=candidates)
     if transitive:
         # cluster-consistent drop: exactly one survivor (the min id) per
         # connected component of verified pairs — a chain a~b~c keeps
         # only a, even though (a,c) never verified directly
-        groups = duplicate_groups(pairs, scope=sc)
+        groups = duplicate_groups(pairs)
         drops = (groups.filter(F.col("doc_id") != F.col("group_id"))
                  .select(F.col("doc_id").alias(id_col)))
     else:
@@ -149,9 +134,7 @@ def curate_full(docs: DataFrame, blocked: DataFrame, benchmark: DataFrame,
                 text_col: str = "text", strata_col: str = "source",
                 min_quality: float = 0.3, threshold: float = 0.8,
                 budget_tokens: int = 3000, budget_mode: str = "exact",
-                transitive: bool = False,
-                stage_path: str | None = None,
-                scope: CacheScope | None = None) -> DataFrame:
+                transitive: bool = False) -> DataFrame:
     """The complete production curation chain, one staged pipeline:
 
     1. **URL canonicalization + re-crawl collapse** — re-crawls and
@@ -185,11 +168,11 @@ def curate_full(docs: DataFrame, blocked: DataFrame, benchmark: DataFrame,
     partitioning; the full chain is oracle-checked end to end
     (``__spark_entry__.oracle_sql()['curate_full']``).
 
-    ``stage_path`` materializes the post-hygiene ``clean`` stage to a
-    durable parquet table instead of a ``localCheckpoint``: checkpoint
-    blocks live on executors, so distributed runs (where an executor
-    loss must recompute, not fail the job) pass a path; local
-    benchmarking keeps the default in-memory lineage cut. Same rows
+    Every stage table of the chain is materialized by
+    :func:`~webextract.functions.stage.stage`: executor-local
+    checkpoints by default, durable parquet tables when the session conf
+    ``spark.webextract.stageDir`` names a directory (distributed runs,
+    where an executor loss must recompute, not fail the job). Same rows
     either way.
     """
     from .hygiene import (
@@ -197,7 +180,6 @@ def curate_full(docs: DataFrame, blocked: DataFrame, benchmark: DataFrame,
         with_pii_masked,
     )
 
-    sc = resolve(scope)
     # re-crawl collapse keep-first: groupBy(min) + id-keyed semi-join
     # (NOT a window-min — see the rationale at curate_corpus's exact
     # dedup: the window would sort and exchange full text rows)
@@ -223,31 +205,22 @@ def curate_full(docs: DataFrame, blocked: DataFrame, benchmark: DataFrame,
         .distinct())
     contaminated = (
         masked.select(F.col(id_col),
-                      F.explode(_gram_hashes(norm_text(text_col), 8))
+                      F.explode(F.array_distinct(
+                          _gram_hashes(norm_text(text_col), 8)))
                       .alias("gh"))
         .join(bench_grams, "gh", "left_semi")
         .select(id_col).distinct())
-    clean = masked.join(contaminated, id_col, "left_anti")
-    # materialized once: consumed by curate_corpus (itself a
-    # multi-consumer stage) AND the budget join below. localCheckpoint
-    # (not persist): clean's analyzed tree carries the whole
-    # canonicalize→blocklist→PII→decontaminate chain, and an
-    # InMemoryRelation keeps that tree as its child — AQE re-analyzes
-    # it once per downstream stage and the LSH self-joins reference it
-    # ~50x (measured: 76 s / 16 MB plan strings at sf0.001 vs 35 s /
-    # 1.5 MB with the lineage cut). localCheckpoint blocks live on
-    # executors, so on a real cluster an executor loss fails the job
-    # instead of recomputing — distributed runs pass ``stage_path`` and
-    # the clean stage is written to (and re-read from) durable storage,
-    # exactly as pipeline.py's sinks stage their tables.
-    if stage_path is not None:
-        clean.write.mode("overwrite").parquet(stage_path)
-        clean = docs.sparkSession.read.parquet(stage_path)
-    else:
-        clean = clean.localCheckpoint(eager=False)
+    # staged once: consumed by curate_corpus (itself a multi-consumer
+    # stage) AND the budget join below. A stage, not a persist: clean's
+    # analyzed tree carries the whole canonicalize→blocklist→PII→
+    # decontaminate chain, and an InMemoryRelation keeps that tree as
+    # its child — AQE re-analyzes it once per downstream stage and the
+    # LSH self-joins reference it ~50x (measured: 76 s / 16 MB plan
+    # strings at sf0.001 vs 35 s / 1.5 MB with the lineage cut).
+    clean = stage(masked.join(contaminated, id_col, "left_anti"))
     survivors = curate_corpus(clean, id_col=id_col, text_col=text_col,
                               min_quality=min_quality, threshold=threshold,
-                              transitive=transitive, scope=sc)
+                              transitive=transitive)
     # the budget stage needs only (id, stratum, priority, n_tokens):
     # survivors already carry quality_score AND n_tokens (computed by
     # the feature stage over the same masked text), so the join pulls
@@ -257,4 +230,4 @@ def curate_full(docs: DataFrame, blocked: DataFrame, benchmark: DataFrame,
     return token_budget_sample(
         enriched, budget_tokens=budget_tokens, strata_col=strata_col,
         priority_col="quality_score", id_col=id_col, text_col=text_col,
-        mode=budget_mode, n_tokens_col="n_tokens", scope=sc)
+        mode=budget_mode, n_tokens_col="n_tokens")

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .cache import CacheScope, resolve
+from .stage import stage
 from .text import norm_text
 
 N_MINHASH = 4
@@ -131,9 +131,7 @@ def band_table(signatures: DataFrame, id_col: str = "doc_id",
 
 def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
                         n_hashes: int = N_MINHASH,
-                        band_size: int = 2,
-                        persist_bands: bool = True,
-                        scope: CacheScope | None = None) -> DataFrame:
+                        band_size: int = 2) -> DataFrame:
     """Band the signatures and self-join per band → candidate pairs (a<b).
 
     Each band key is a hash of ``band_size`` consecutive minhashes; docs
@@ -141,24 +139,15 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     so the shuffle is balanced; a skewed bucket (e.g. the empty-text
     signature) is bounded by dropping NULL-signature rows.
 
-    ``persist_bands`` cache contract: the default materializes the band
-    table once so the self-join does not recompute the whole
-    shingle→md5→minhash subtree per join side (measured ~1.4x on a fused
-    plan; Spark does not exchange-reuse across the rename). With
-    ``scope=None`` the cache lives until ``spark.catalog.clearCache()``
-    or session stop — right for one-shot jobs; long-lived sessions pass
-    a :class:`~webextract.functions.cache.CacheScope` (via
-    ``cache_scope()``) and release deterministically after the consuming
-    action. When ``signatures`` is already materialized (a column in the
-    corpus table, a cached DataFrame — the at-scale shape), pass
-    ``persist_bands=False``: recomputing the banding over materialized
-    signatures is just an md5.
+    The band table is staged once
+    (:func:`~webextract.functions.stage.stage`), so the self-join does
+    not recompute the whole shingle→md5→minhash subtree per join side
+    (measured ~1.4x on a fused plan; Spark does not exchange-reuse
+    across the rename).
     """
     assert n_hashes % band_size == 0
-    all_bands = band_table(signatures, id_col=id_col, n_hashes=n_hashes,
-                           band_size=band_size)
-    if persist_bands:
-        all_bands = resolve(scope).persist(all_bands)
+    all_bands = stage(band_table(signatures, id_col=id_col,
+                                 n_hashes=n_hashes, band_size=band_size))
     left = all_bands.select(F.col(id_col).alias("doc_a"), "band_key")
     right = all_bands.select(F.col(id_col).alias("doc_b"), "band_key")
     return (
@@ -215,18 +204,17 @@ def simhash16(docs: DataFrame, id_col: str = "doc_id",
 
 def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text",
-                        threshold: float = 0.8,
-                        scope: CacheScope | None = None) -> DataFrame:
+                        threshold: float = 0.8) -> DataFrame:
     """Pairs (a<b) with Jaccard similarity >= threshold over distinct
     word 3-gram shingles. Exact; at scale feed it LSH candidates.
 
     Per-doc shingle dedup is ``array_distinct`` inside codegen — (id, sh)
     duplicates only occur within one document, so no global ``distinct``
     exchange is needed, and sizes are a row-local ``size()``. The compact
-    per-doc set relation is materialized once (``scope`` release
-    contract): it feeds both self-join sides and the sizes projection,
-    and with no exchange below the join there is otherwise nothing for
-    ReuseExchange to share — each side would re-shingle the corpus.
+    per-doc set relation is staged once (:func:`stage`): it feeds both
+    self-join sides and the sizes projection, and with no exchange below
+    the join there is otherwise nothing for ReuseExchange to share —
+    each side would re-shingle the corpus.
 
     Shingles are hashed to 60-bit ints (:func:`hash60`) BEFORE the
     self-join: the exchange then moves 8-byte keys instead of ~15-byte×w
@@ -234,7 +222,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     since the md5-derived hash is deterministic the DuckDB oracle stays
     exact. Collisions (p ≈ n²/2^61 per doc pair) cannot produce a false
     pair on their own; they could only nudge a count."""
-    sets = resolve(scope).persist(docs.select(
+    sets = stage(docs.select(
         F.col(id_col).alias("id"),
         F.array_distinct(
             F.transform(shingles(norm_text(text_col)), hash60)).alias("shs")))
@@ -267,8 +255,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def duplicate_groups(pairs: DataFrame, max_iter: int = 25,
-                     scope: CacheScope | None = None) -> DataFrame:
+def duplicate_groups(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """Transitive duplicate grouping: connected components over verified
     near-dup pairs → (doc_id, group_id), group_id = MIN doc id in the
     component (the canonical representative, same keep-lowest convention
@@ -289,45 +276,36 @@ def duplicate_groups(pairs: DataFrame, max_iter: int = 25,
     safety bound, and non-convergence raises instead of returning a
     partially-merged grouping.
 
-    Each round's labels are materialized with ``localCheckpoint`` —
-    the pointer-jump self-join references the previous round TWICE, so
-    an un-truncated lineage doubles per round (exponential plan growth
-    OOMs the driver long before the data does). On a real cluster with
-    executor loss, point ``spark.sparkContext.setCheckpointDir`` at
-    durable storage and swap in ``checkpoint`` — same plan shape.
+    Each round's labels are an eager :func:`stage` — the pointer-jump
+    self-join references the previous round TWICE, so an un-truncated
+    lineage doubles per round (exponential plan growth OOMs the driver
+    long before the data does), and a cached relation would still carry
+    the whole verify pipeline into every round's analysis. Setting
+    ``spark.webextract.stageDir`` makes every round a durable parquet
+    table — same plan shape.
     """
     fwd = pairs.select(F.col("doc_a").alias("src"),
                        F.col("doc_b").alias("dst"))
-    # localCheckpoint (not persist): a cached relation still carries its
-    # full logical plan — here the whole verify pipeline — into EVERY
-    # round's analysis, making driver-side planning the dominant
-    # per-round cost; truncating the lineage keeps round plans constant-
-    # size. ``scope`` is accepted for API consistency but the loop state
-    # needs no release path: checkpointed RDDs are dropped by the
-    # ContextCleaner as soon as the previous round's frame is
-    # unreferenced.
-    edges = (
+    edges = stage(
         fwd.unionByName(fwd.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst"))).distinct()
-        .localCheckpoint()
-    )
+                                   F.col("src").alias("dst"))).distinct(),
+        eager=True)
     # decimal(38,0) witness: a long sum wraps silently at 2^63, so with
     # 64-bit doc ids at corpus scale a round's decrease could wrap past
     # the modulus and falsely compare equal — decimal cannot.
-    # The witness is collected via observe() DURING the eager
-    # checkpoint's own job instead of a separate per-round agg action —
-    # one fewer Spark job per round (the loop's cost is job count, not
-    # data).
+    # The witness is collected via observe() DURING the eager stage's
+    # own job instead of a separate per-round agg action — one fewer
+    # Spark job per round (the loop's cost is job count, not data).
     from pyspark.sql import Observation
 
     _wsum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
 
-    def _checkpoint_with_sum(df):
+    def _stage_with_sum(df):
         obs = Observation()
-        cp = df.observe(obs, _wsum).localCheckpoint()
-        return cp, obs.get["s"]
+        staged = stage(df.observe(obs, _wsum), eager=True)
+        return staged, obs.get["s"]
 
-    labels, prev_sum = _checkpoint_with_sum(
+    labels, prev_sum = _stage_with_sum(
         edges.select(F.col("src").alias("id")).distinct()
         .withColumn("label", F.col("id")))
     if prev_sum is None:  # no pairs at all
@@ -348,7 +326,7 @@ def duplicate_groups(pairs: DataFrame, max_iter: int = 25,
         # inner self-join is total
         ptr = stepped.select(F.col("id").alias("pid"),
                              F.col("label").alias("plabel"))
-        labels, new_sum = _checkpoint_with_sum(
+        labels, new_sum = _stage_with_sum(
             stepped.join(ptr, stepped["label"] == ptr["pid"])
             .select("id", F.col("plabel").alias("label"))
         )
@@ -429,7 +407,7 @@ def candidate_shingle_sets(docs: DataFrame, cands: DataFrame,
     """(id, shs: array<bigint>) — the DISTINCT hashed-shingle set per doc
     that appears in a candidate-pair set, one compact array row per doc.
     Shingles are :func:`hash60`-hashed at materialization so the verify
-    join exchanges 8-byte ints, not n-gram strings (and the persisted
+    join exchanges 8-byte ints, not n-gram strings (and the staged
     relation is several-fold smaller).
 
     Two scale properties: the semi-join before shingling keeps the
@@ -461,8 +439,7 @@ def dedup_increment(new_docs: DataFrame, corpus: DataFrame,
                     threshold: float = 0.8,
                     n_hashes: int = N_MINHASH, band_size: int = 2,
                     corpus_fingerprints: DataFrame | None = None,
-                    corpus_signatures: DataFrame | None = None,
-                    scope: CacheScope | None = None) -> DataFrame:
+                    corpus_signatures: DataFrame | None = None) -> DataFrame:
     """Dedup a NEW crawl snapshot against a committed corpus without
     re-deduping the corpus — the incremental-growth shape of a
     continuously-crawled 100 TB training set (the committed side is
@@ -496,8 +473,6 @@ def dedup_increment(new_docs: DataFrame, corpus: DataFrame,
     for the candidate-bounded verification; left unset, both derive
     from ``corpus`` in one map-only pass (the local/test shape).
     """
-    sc = resolve(scope)
-
     def _fps(df: DataFrame) -> DataFrame:
         return df.select(
             F.col(id_col),
@@ -518,51 +493,46 @@ def dedup_increment(new_docs: DataFrame, corpus: DataFrame,
             "_min_id",
             F.min(id_col).over(Window.partitionBy("fingerprint")))
         .filter(F.col(id_col) == F.col("_min_id")).drop("_min_id"))
-    # lineage cut, not persist (the curate_full lesson, curate.py:128):
-    # the banding/verify/drop chain below references these relations
-    # dozens of times, and an InMemoryRelation keeps the whole analyzed
-    # producer tree as its child — AQE re-analyzes it per reference and
-    # the final plan exploded to ~48k scan nodes (measured: 42 s cold /
-    # 17 s with every block cached, pure driver analysis; 14 s / 3 s
-    # with the cut). At cluster scale the equivalent is the stored
-    # exact-survivor stage table.
-    exact_surv = batch_first.join(
-        corpus_fp.select("fingerprint"), "fingerprint", "left_anti") \
-        .localCheckpoint(eager=False)
+    # staged (a lineage cut, not a persist): the banding/verify/drop
+    # chain below references these relations dozens of times, and an
+    # InMemoryRelation keeps the whole analyzed producer tree as its
+    # child — AQE re-analyzes it per reference and the final plan
+    # exploded to ~48k scan nodes (measured: 42 s cold / 17 s with
+    # every block cached, pure driver analysis; 14 s / 3 s with the cut)
+    exact_surv = stage(batch_first.join(
+        corpus_fp.select("fingerprint"), "fingerprint", "left_anti"))
 
     # near-dup candidates: new bands vs (corpus ∪ new) bands — consumed
     # by the verify join AND the drop classification below
-    new_surv = (
+    new_surv = stage(
         new_docs.select(F.col(id_col), F.col(text_col))
-        .join(exact_surv.select(id_col), id_col, "left_semi")
-        .localCheckpoint(eager=False))
+        .join(exact_surv.select(id_col), id_col, "left_semi"))
     new_sigs = with_minhash(new_surv, id_col, text_col, n_hashes)
     corpus_sigs = (corpus_signatures if corpus_signatures is not None
                    else with_minhash(corpus.select(id_col, text_col),
                                      id_col, text_col, n_hashes))
-    nb = sc.persist(band_table(new_sigs, id_col, n_hashes, band_size))
+    nb = stage(band_table(new_sigs, id_col, n_hashes, band_size))
     cb = band_table(corpus_sigs, id_col, n_hashes, band_size)
     other = (cb.select(F.col(id_col).alias("_o"), "band_key")
              .unionByName(nb.select(F.col(id_col).alias("_o"),
                                     "band_key")))
-    cands = (
+    cands = stage(  # 3 consumers inside the verify
         nb.select(F.col(id_col).alias("_n"), "band_key")
         .join(other, "band_key")
         .filter(F.col("_n") != F.col("_o"))
         .select(F.least("_n", "_o").alias("doc_a"),
                 F.greatest("_n", "_o").alias("doc_b"))
-        .distinct()
-        .localCheckpoint(eager=False))  # 3 consumers inside the verify
+        .distinct())
 
     universe = corpus.select(F.col(id_col), F.col(text_col)) \
         .unionByName(new_surv)
-    # no checkpoint: since the drop rule became two marker left-joins,
-    # the pair stream flows through it ONCE — a cut here would only add
-    # a materialization barrier (its lineage is already constant-size
-    # thanks to the cands/sets cuts inside the verify)
+    # no stage: since the drop rule became two marker left-joins, the
+    # pair stream flows through it ONCE — a cut here would only add a
+    # materialization barrier (its lineage is already constant-size
+    # thanks to the cands/sets stages inside the verify)
     pairs = near_duplicate_docs(
         universe, id_col=id_col, text_col=text_col, threshold=threshold,
-        candidates=cands, scope=sc)
+        candidates=cands)
     # greedy drop rule over verified pairs (doc_a < doc_b): the higher
     # new id of a new-new pair, and the new side of a corpus-new pair.
     # Two left joins with membership markers replace the previous
@@ -585,8 +555,7 @@ def dedup_increment(new_docs: DataFrame, corpus: DataFrame,
 def near_duplicate_docs(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text",
                         threshold: float = 0.8,
-                        candidates: DataFrame | None = None,
-                        scope: CacheScope | None = None) -> DataFrame:
+                        candidates: DataFrame | None = None) -> DataFrame:
     """The composed at-scale near-dup pipeline: MinHash → LSH banding →
     exact Jaccard verification on the candidate pairs only.
 
@@ -602,27 +571,23 @@ def near_duplicate_docs(docs: DataFrame, id_col: str = "doc_id",
     pairs are stored stages in a production dedup run, computed once per
     corpus snapshot, not per downstream consumer).
 
-    Two relations here have multiple consumers and are persisted so Spark
-    does not recompute their subtrees per consumer: the candidate pairs
-    (semi-join id set + the verify join) and the per-doc candidate
+    Two relations here have multiple consumers and are staged
+    (:func:`~webextract.functions.stage.stage`) so Spark does not
+    recompute their subtrees per consumer: the fused path's candidate
+    pairs (semi-join id set + the verify join) and the per-doc candidate
     shingle-set relation (sizes + both sides of the common-shingle join —
-    measured ~4x wall on the unfused plan at sf0.1). The cached relation
-    is one compact array row per doc; the exploded forms derive from the
-    cache. Release contract is ``scope``: see
-    :mod:`webextract.functions.cache`.
+    measured ~4x wall on the unfused plan at sf0.1). The staged relation
+    is one compact array row per doc; the exploded forms derive from it.
     """
-    sc = resolve(scope)
     if candidates is not None:
         cands = candidates
     else:
         # fused path: the candidate set feeds both the shingle semi-join
         # and the verify join; unmaterialized, each consumer would
         # recompute the whole minhash+band self-join subtree
-        cands = lsh_candidate_pairs(
-            with_minhash(docs, id_col, text_col), id_col=id_col,
-            scope=sc).localCheckpoint(eager=False)
-    sets = candidate_shingle_sets(docs, cands, id_col, text_col) \
-        .localCheckpoint(eager=False)
+        cands = stage(lsh_candidate_pairs(
+            with_minhash(docs, id_col, text_col), id_col=id_col))
+    sets = stage(candidate_shingle_sets(docs, cands, id_col, text_col))
     # set sizes ride THROUGH the verify join (one extra int per exploded
     # row, candidate-bounded volume) instead of two id-keyed joins after
     # the aggregation — per group the size is constant, max() recovers

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from webextract.functions.dedup import hash60
+from webextract.functions.stage import stage
 from webextract.functions.text import norm_text
 
 # ---------------------------------------------------------------------------
@@ -289,8 +290,7 @@ def token_budget_sample(docs: DataFrame, budget_tokens: int,
                         text_col: str = "text",
                         mode: str = "exact",
                         buckets: int = 32,
-                        n_tokens_col: str | None = None,
-                        scope=None) -> DataFrame:
+                        n_tokens_col: str | None = None) -> DataFrame:
     """Budgeted mixture fill: keep documents per stratum in priority
     order until the stratum's cumulative token count would exceed
     ``budget_tokens`` — how a training-mix recipe ("15B tokens of
@@ -322,11 +322,16 @@ def token_budget_sample(docs: DataFrame, budget_tokens: int,
     non-null in both modes (the exact window would order nulls last;
     the histogram join gives them no bucket).
 
+    ``n_tokens_col`` names a precomputed token count to use instead of
+    counting ``text_col``; a NULL count is treated as 0 tokens (as the
+    text-derived count treats empty text), never as a gap in the
+    running sum.
+
     In approx mode the projected base relation (id, stratum, priority,
-    n_tokens — 4 narrow columns) is materialized via ``scope``
-    (:mod:`webextract.functions.cache`): the two-phase plan consumes it
-    THREE times (edge sketch, bucket join, histogram), and without the
-    persist each reference re-executes the whole upstream producer —
+    n_tokens — 4 narrow columns) is staged
+    (:func:`~webextract.functions.stage.stage`): the two-phase plan
+    consumes it THREE times (edge sketch, bucket join, histogram), and
+    unstaged each reference re-executes the whole upstream producer —
     measured 2.4× wall on the composed ``curate_full`` chain, where the
     producer is the near-dup survivor join. At 10^12 docs this
     projection is the stored stage table a budget recipe reads anyway.
@@ -340,25 +345,20 @@ def token_budget_sample(docs: DataFrame, budget_tokens: int,
     # identical ``token_count(norm_text(text))``) skip re-normalizing
     # and re-splitting the full text here — the budget never needs the
     # text itself, only its count
-    n_tok = (F.col(n_tokens_col) if n_tokens_col is not None
+    n_tok = (F.coalesce(F.col(n_tokens_col), F.lit(0))
+             if n_tokens_col is not None
              else token_count(norm_text(text_col)))
     base = docs.select(F.col(id_col).alias("id"),
                        F.col(strata_col).alias("stratum"),
                        F.col(priority_col),
                        n_tok.alias("n_tokens"))
     if mode == "approx":
-        # materialize AND cut lineage: the two-phase plan consumes this
-        # relation three times (edge sketch, bucket join, histogram),
-        # and in the composed curate_full chain its producer is the
-        # whole near-dup survivor join — a persist alone keeps that
-        # analyzed tree as the InMemoryRelation's child, re-analyzed
-        # per reference (measured 1.9 MB of physical-plan text). The
-        # checkpoint makes each reference a constant-size leaf; at
-        # 10^12 docs this projection is the stored stage table a
-        # budget recipe reads anyway. (``scope`` stays in the signature
-        # for API stability; checkpoint blocks are released by the
-        # ContextCleaner when the frame is unreferenced.)
-        base = base.localCheckpoint(eager=False)
+        # staged, not persisted: in the composed curate_full chain the
+        # producer is the whole near-dup survivor join, and a persist
+        # keeps that analyzed tree as the InMemoryRelation's child,
+        # re-analyzed per reference (measured 1.9 MB of physical-plan
+        # text); the stage makes each reference a constant-size leaf
+        base = stage(base)
         prio = F.col(priority_col)
         qs = [i / buckets for i in range(1, buckets)]
         edges = base.groupBy("stratum").agg(

@@ -1,5 +1,5 @@
 """DataFrame wiring: scan → resume anti-join → salted repartition with
-giant-blob skew routing → ``mapInPandas`` extraction → sink + per-partition
+giant-blob skew routing → ``mapInArrow`` extraction → sink + per-partition
 lineage/metrics.
 
 This is the Spark lifecycle of the reference's flagship entry point
