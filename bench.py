@@ -589,7 +589,7 @@ def write_bench_md(scaling: dict, timings: dict[str, float]) -> None:
         "probe of the SAME extraction at "
         f"{scaling['workload_eff_4_to_16']}: per-document work is "
         "embarrassingly parallel and the plan keeps it that way (one "
-        "salted exchange, partition-local everything else).",
+        "url-hash exchange, partition-local everything else).",
         "",
         f"Headline query wall times at {SF_DIR} on local[{CPUS}] "
         "(noop sink, full computation). The near-dup/curation family "

@@ -20,7 +20,6 @@ from webextract.pipeline import (
     extract_dataframe,
     plan_todo,
     run_extraction,
-    salted_repartition,
 )
 from webextract.schema import EXTRACTED_SCHEMA, PAGES_SCHEMA
 
@@ -75,10 +74,24 @@ def test_partition_invariance(spark, pages):
     assert len(hashes) == 1
 
 
-def test_salted_repartition_routes_giants(spark, pages):
-    opts = PipelineOptions(num_partitions=4, giant_bytes=2000)
-    routed = salted_repartition(pages.select("url", "html"), opts)
-    assert routed.count() == N  # nothing lost (incl. null/empty html rows)
+def test_url_hash_balances_rows_and_giants(spark):
+    # 4,000 pages, 40 of them ~7 KB giants, over 32 partitions. Urls are
+    # unique, so a url hash spreads them like balls into bins: the fullest
+    # partition holds ~1.2x the mean rows, and 40 giants in 32 bins stay
+    # within a handful per partition.
+    n, n_parts = 4000, 32
+    pages = spark.createDataFrame(
+        gen_pages(n, giant_every=100, giant_repeat=100), PAGES_SCHEMA)
+    out = extract_dataframe(
+        pages, opts=PipelineOptions(num_partitions=n_parts))
+    per_part = out.groupBy("partition_id").agg(
+        F.count("*").alias("rows"),
+        F.sum((F.col("n_bytes_in") > 4096).cast("int")).alias("giants"),
+    ).collect()
+    assert sum(r["rows"] for r in per_part) == n  # nothing lost
+    assert sum(r["giants"] for r in per_part) == n // 100
+    assert max(r["rows"] for r in per_part) <= 1.5 * n / n_parts
+    assert max(r["giants"] for r in per_part) <= 6
 
 
 def test_resume_anti_join_and_idempotence(spark, pages, tmp_path):

@@ -37,16 +37,24 @@ def _count_nodes(plan: str, node: str) -> int:
         if line.strip().startswith("(") and f") {node}" in line)
 
 
-def test_extraction_scan_prunes_to_url_html(spark, tmp_path):
+@pytest.fixture(scope="module")
+def pages_parquet(spark, tmp_path_factory):
+    """(pages, committed urls) as parquet scans: 50 fixture pages and the
+    urls of 10 of them, the shape a resume reads back from its sink."""
     from webextract.fixtures import pages_dataframe
     from webextract.schema import PAGES_SCHEMA
 
-    path = str(tmp_path / "pages")
+    root = tmp_path_factory.mktemp("plans")
     pages_dataframe(spark, 50, num_partitions=2, giant_every=0) \
-        .write.parquet(path)
-    pages = spark.read.schema(PAGES_SCHEMA).parquet(path)
+        .write.parquet(str(root / "pages"))
+    pages = spark.read.schema(PAGES_SCHEMA).parquet(str(root / "pages"))
+    pages.limit(10).select("url").write.parquet(str(root / "done"))
+    return pages, spark.read.parquet(str(root / "done"))
 
-    # default single-pass mode: ONE scan, ONE exchange
+
+def test_extraction_scan_prunes_to_url_html(pages_parquet):
+    pages, _ = pages_parquet
+    # ONE scan, ONE exchange
     plan = plan_of(extract_dataframe(pages, opts=PipelineOptions(num_partitions=2)))
     # the scan must read ONLY url+html — warc_ts/text/lang never cross
     assert "ReadSchema: struct<url:string,html:binary>" in plan
@@ -54,11 +62,47 @@ def test_extraction_scan_prunes_to_url_html(spark, tmp_path):
     assert _count_nodes(plan, "Exchange") == 1, plan
     assert _count_nodes(plan, "Scan parquet") == 1, plan
 
-    # dual mode: two scans, two exchanges (salted hash + giant round-robin)
-    plan2 = plan_of(extract_dataframe(
-        pages, opts=PipelineOptions(num_partitions=2, scan_mode="dual")))
-    assert _count_nodes(plan2, "Exchange") == 2, plan2
-    assert _count_nodes(plan2, "Scan parquet") == 2, plan2
+
+def _exchanges_reading(plan: str, column: str) -> list[str]:
+    """Headers of the Exchange nodes whose ``Input`` list holds ``column``
+    (formatted explain: a ``(k) Name`` header, then its detail lines)."""
+    hits = []
+    for section in plan.split("\n\n"):
+        head, _, body = section.strip().partition("\n")
+        if not (head.startswith("(") and "Exchange" in head):
+            continue
+        inputs = [ln for ln in body.splitlines() if ln.startswith("Input")]
+        if any(f"{column}#" in ln for ln in inputs):
+            hits.append(head)
+    return hits
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+@pytest.mark.parametrize("broadcast", ["10MB", "-1"])
+@pytest.mark.parametrize("resume", [False, True])
+def test_run_extraction_html_crosses_one_exchange(spark, pages_parquet, aqe,
+                                                  broadcast, resume):
+    # the composition run_extraction builds: url-hash repartition below
+    # the dedupe + resume anti-join; extract_dataframe's repartition on
+    # the same key must then be planned away, leaving ONE html shuffle
+    # (the resume side ships urls only), with broadcast and sort-merge
+    # anti-joins, with and without AQE
+    pages, done = pages_parquet
+    n = 4
+    keys = ("spark.sql.adaptive.enabled",
+            "spark.sql.autoBroadcastJoinThreshold")
+    saved = [spark.conf.get(k) for k in keys]
+    spark.conf.set(keys[0], aqe)
+    spark.conf.set(keys[1], broadcast)
+    try:
+        plan = plan_of(extract_dataframe(
+            plan_todo(pages.repartition(n, "url"), done if resume else None),
+            opts=PipelineOptions(num_partitions=n)))
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
+    assert len(_exchanges_reading(plan, "html")) == 1, plan
+    assert ("LeftAnti" in plan) == resume
 
 
 def test_minhash_is_shuffle_free_single_fold(docs):

@@ -1,8 +1,8 @@
 """Fast-vs-stdlib tokenizer equivalence.
 
 The fast regex tokenizer is the hot-path engine; the stdlib
-``html.parser``-driven one is the cross-validation reference. Both feed
-the same ``_BlockBuilder``, so equivalence of the emitted blocks —
+``html.parser``-driven one (``stdlib_tokenizer.py``, test tree only) is
+the cross-validation reference. Equivalence of the emitted blocks —
 (tag, marginal, text, char counts) — over the whole fixture sweep plus
 hypothesis-generated tag soup pins the fast engine's event stream.
 
@@ -20,12 +20,9 @@ from __future__ import annotations
 import hypothesis.strategies as st
 from hypothesis import given, settings
 
+from stdlib_tokenizer import tokenize_blocks_stdlib
 from webextract.fixtures import gen_pages
-from webextract.html_extract import (
-    decode_payload,
-    tokenize_blocks,
-    tokenize_blocks_stdlib,
-)
+from webextract.html_extract import decode_payload, tokenize_blocks
 from webextract.pdf_extract import is_pdf
 
 

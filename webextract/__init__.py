@@ -25,9 +25,9 @@ Layout:
   (the analog of the reference's ``build_{mode}`` reflection dispatch,
   ``page_xml/xml_converters/xml_converter.py:72-107``).
 - :mod:`webextract.schema`       — Spark StructTypes for every table.
-- :mod:`webextract.pipeline`     — DataFrame wiring: scan → resume anti-join
-  → salted repartition with giant-blob skew routing → ``mapInArrow`` →
-  sink + per-partition lineage/metrics.
+- :mod:`webextract.pipeline`     — DataFrame wiring: scan → url-hash
+  repartition → dedupe + resume anti-join → ``mapInArrow`` → sink +
+  per-partition lineage/metrics.
 - :mod:`webextract.fixtures`     — deterministic synthetic pages (seed=42).
 - :mod:`webextract.evaluate`     — confusion-matrix / IoU-analog metrics
   (reference ``evaluation/sem_seg_evaluation.py:96-212``).

@@ -73,9 +73,6 @@ def _add_extract_args(p: argparse.ArgumentParser) -> None:
                    help="lineage/metrics sink path")
     p.add_argument("--config", default=None, help="ExtractConfig JSON file")
     p.add_argument("--partitions", type=int, default=32)
-    p.add_argument("--giant-bytes", type=int, default=1 << 20)
-    p.add_argument("--scan-mode", choices=("single", "dual"),
-                   default="single")
     p.add_argument("--run-id", default=None)
     p.add_argument("--partition-by-date", action="store_true",
                    help="hive-partition the sink by warc_date (crawl day)")
@@ -235,8 +232,6 @@ def main(argv: list[str] | None = None) -> int:
     if args.command == "extract":
         cfg = load_config(args.config)
         opts = PipelineOptions(num_partitions=args.partitions,
-                               giant_bytes=args.giant_bytes,
-                               scan_mode=args.scan_mode,
                                sink_format=args.sink_format,
                                sink_is_table=args.sink_table)
         if args.input_format == "warc":

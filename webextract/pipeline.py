@@ -1,5 +1,5 @@
-"""DataFrame wiring: scan → resume anti-join → salted repartition with
-giant-blob skew routing → ``mapInArrow`` extraction → sink + per-partition
+"""DataFrame wiring: scan → url-hash repartition → dedupe + resume
+anti-join → ``mapInArrow`` extraction → sink + per-partition
 lineage/metrics.
 
 This is the Spark lifecycle of the reference's flagship entry point
@@ -10,9 +10,10 @@ This is the Spark lifecycle of the reference's flagship entry point
   (``data/preprocess.py:404-408``)                    → **left_anti join**
   against already-committed urls (checkpoint/resume)
 - ``Pool(os.cpu_count()).imap_unordered`` fan-out
-  (``data/preprocess.py:774-781``)                    → salted repartition
-  sized to the cluster, with giant blobs routed round-robin so one 50 MB
-  page cannot wreck a partition of 4 KB pages (north_rule skew handling)
+  (``data/preprocess.py:774-781``)                    → ``repartition(n,
+  "url")`` sized to the cluster: url is unique after the dedupe, so its
+  hash spreads rows — giant blobs included — like balls into bins, with
+  no hot key to salt away (north_rule skew handling)
 - DataLoader prefetch (``inference.py:377-387``)      → Arrow batching
 - atomic PAGE-XML publish (``utils/tempdir.py:122-140``) → parquet append /
   Iceberg snapshot commit (both atomic at the commit level)
@@ -20,13 +21,17 @@ This is the Spark lifecycle of the reference's flagship entry point
   config hash in a per-partition metrics table
 
 Scale notes (100 TB design point): the hot path is scan → exchange →
-Python runner → write; exactly one shuffle (the explicit repartition that
-re-balances raw WARC-sized input splits and isolates skew). The resume
-anti-join broadcasts nothing by default — at 10^12 committed urls it is a
-shuffle join on the url key, which Catalyst plans as sort-merge; AQE
-handles post-shuffle sizing. Metrics derive from the *committed* output
-(column-pruned read-back of 5 int columns), so metrics and data can never
-disagree after a partial failure.
+Python runner → write; the html column crosses exactly one shuffle. In
+``run_extraction`` the url-hash repartition sits below the dedupe and the
+resume anti-join, which reuse its partitioning, and the identical
+repartition in ``extract_dataframe`` is then planned away (pinned by
+``tests/test_plans.py::test_run_extraction_html_crosses_one_exchange``).
+The resume anti-join broadcasts nothing by default — at 10^12 committed
+urls it is a shuffle join on the url key, which Catalyst plans as
+sort-merge, shuffling only the url-only committed side to
+``num_partitions``; AQE handles post-shuffle sizing. Metrics derive from
+the *committed* output (column-pruned read-back of 5 int columns), so
+metrics and data can never disagree after a partial failure.
 """
 
 from __future__ import annotations
@@ -85,9 +90,7 @@ def _git_hash() -> str:
 
 @dataclass(frozen=True)
 class PipelineOptions:
-    num_partitions: int = 32
-    giant_bytes: int = 1 << 20       # blobs above this get their own routing
-    salt_factor: int = 4             # salt buckets per target partition
+    num_partitions: int = 32         # url-hash partitions of the extraction
     # sink provider + addressing: with ``sink_is_table=False`` (default)
     # the output argument is a filesystem path and ``sink_format`` must be
     # "parquet"; with ``sink_is_table=True`` the output argument is a
@@ -97,12 +100,6 @@ class PipelineOptions:
     # session-catalog managed table (used by the tests).
     sink_format: str = "parquet"     # "parquet" | "iceberg"
     sink_is_table: bool = False
-    # "single": one scan, giants hashed into a dedicated salt space
-    #           (default — at 100 TB a second scan of the html column is
-    #           the dominant extra cost)
-    # "dual":   two scans, giants spread round-robin (tightest giant tail;
-    #           right when giants are both huge and frequent)
-    scan_mode: str = "single"
 
     def __post_init__(self) -> None:
         if self.sink_format not in ("parquet", "iceberg"):
@@ -179,18 +176,6 @@ def read_sink(spark: SparkSession, output: str,
         raise
 
 
-def completed_urls(spark: SparkSession, output: str,
-                   opts: PipelineOptions = PipelineOptions()) -> DataFrame | None:
-    """urls already committed to the sink — the checkpoint unit.
-
-    Analog of the reference's skip-if-exists stamp files
-    (``data/preprocess.py:404-408,471-475``); with Iceberg the read pins
-    the current snapshot so resume is consistent under concurrent writers.
-    """
-    committed = read_sink(spark, output, opts)
-    return None if committed is None else committed.select("url")
-
-
 def plan_todo(pages: DataFrame, done: DataFrame | None,
               dedupe: bool = True) -> DataFrame:
     """Resume anti-join: only never-committed urls are (re)processed.
@@ -198,10 +183,11 @@ def plan_todo(pages: DataFrame, done: DataFrame | None,
     ``dedupe`` is the S2 ingest guard (reference duplicate-name check,
     ``data/preprocess.py:241-281``): crawl tables can carry duplicate urls;
     exactly one row per url survives. The dropDuplicates and the left_anti
-    join shuffle on the same key, so Catalyst/AQE reuses the exchange —
-    one url-keyed shuffle total, not two. Combined with deterministic span
-    ids (P14) this makes reruns after partial failure idempotent: no
-    duplicates, no gaps.
+    join need the same url clustering, so one url-keyed shuffle serves
+    both; on ``pages`` already hash-partitioned by url (``run_extraction``
+    passes it so) they add none to the pages side. Combined with
+    deterministic span ids (P14) this makes reruns after partial failure
+    idempotent: no duplicates, no gaps.
     """
     pages = pages.filter(F.col("url").isNotNull())
     if dedupe:
@@ -209,53 +195,6 @@ def plan_todo(pages: DataFrame, done: DataFrame | None,
     if done is None:
         return pages
     return pages.join(done, "url", "left_anti")
-
-
-def salted_repartition(df: DataFrame, opts: PipelineOptions) -> DataFrame:
-    """Explicit skew handling (north_rule; no Catalyst equivalent for
-    UDF-stage value skew — AQE only fixes shuffle-size skew).
-
-    Normal pages: salted url-hash repartition — ``pmod(xxhash64(url),
-    n*salt_factor)`` spreads hot key ranges evenly. Giant blobs
-    (> ``giant_bytes``) must not queue behind one unlucky partition (the
-    reference's per-record ``imap_unordered`` has the same
-    straggler-avoidance goal, ``data/preprocess.py:774-781``); two modes:
-
-    - ``single`` (default): ONE scan + ONE exchange — giants hash into a
-      dedicated fine-grained salt space (num_partitions extra buckets)
-      disjoint from the normal space. Expected giants per bucket ~
-      n_giants / num_partitions; the tail is a small constant factor of
-      one giant's parse time. At 100 TB the saved second scan of the
-      html column dominates that tail.
-    - ``dual``: two scans — giants split off and spread round-robin
-      (max one extra giant per slot). Tightest tail; pay the re-scan.
-    """
-    size = F.coalesce(F.octet_length(F.col("html")), F.lit(0))
-    n_salts = opts.num_partitions * opts.salt_factor
-    if opts.scan_mode == "dual":
-        giants = df.filter(size > opts.giant_bytes) \
-            .repartition(opts.num_partitions)
-        normal = (
-            df.filter(size <= opts.giant_bytes)
-            .withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(n_salts)))
-            .repartition(opts.num_partitions, "_salt")
-            .drop("_salt")
-        )
-        return normal.unionByName(giants)
-    # giant salt space is as fine-grained as the normal one (n_salts extra
-    # values, disjoint range): with only num_partitions giant salts, the
-    # salt->partition hash collides again and one partition can collect
-    # 3-4x its giant share (observed empirically); fine salts keep the max
-    # load near the balls-in-bins optimum
-    salt = F.when(
-        size > opts.giant_bytes,
-        F.lit(n_salts) + F.pmod(F.xxhash64("url", F.lit(1)), F.lit(n_salts)),
-    ).otherwise(F.pmod(F.xxhash64("url"), F.lit(n_salts)))
-    return (
-        df.withColumn("_salt", salt)
-        .repartition(opts.num_partitions, "_salt")
-        .drop("_salt")
-    )
 
 
 def extract_dataframe(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
@@ -270,11 +209,17 @@ def extract_dataframe(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
     through the Arrow stage zero-copy and are appended to the output
     schema (e.g. ``warc_ts`` for date-partitioned sinks).
 
+    Rows are spread by ``repartition(opts.num_partitions, "url")``. With
+    unique urls a hash of the url balances partitions by row count and by
+    giant-blob count alike (balls into bins), so no salt or size class is
+    needed. Input already partitioned that way (``run_extraction``) is
+    not shuffled again: Spark drops the repartition as redundant.
+
     ``debug_scores=True`` returns the per-block feature/score view
     (``BLOCK_SCORES_SCHEMA``) instead of the extracted rows — the S8
     debug-sink analog (reference ``page_xml/output_page_xml.py:156-189``)
     for tuning link-density / min-size thresholds on a real crawl sample.
-    Same scan pruning and skew routing; one row per (url, block)."""
+    Same scan pruning and partitioning; one row per (url, block)."""
     from pyspark.sql.types import StructType
 
     from .extract import make_block_score_batches
@@ -282,7 +227,7 @@ def extract_dataframe(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
 
     run_id = run_id or uuid.uuid4().hex[:16]
     slim = pages.select("url", "html", *passthrough)
-    routed = salted_repartition(slim, opts)
+    routed = slim.repartition(opts.num_partitions, "url")
     if debug_scores:
         return routed.mapInArrow(
             make_block_score_batches(cfg), BLOCK_SCORES_SCHEMA)
@@ -316,7 +261,8 @@ def run_extraction(spark: SparkSession, pages: DataFrame, output_path: str,
                    opts: PipelineOptions = PipelineOptions(),
                    run_id: str | None = None,
                    partition_by_date: bool = False) -> dict:
-    """Full resumable run: anti-join → extract → append → metrics append.
+    """Full resumable run: url-hash repartition → dedupe + anti-join →
+    extract → append → metrics append.
 
     ``partition_by_date=True`` lays the sink out hive-partitioned by
     ``warc_date`` (crawl day): at 10^12 rows, time-ranged reads of the
@@ -357,7 +303,11 @@ def run_extraction(spark: SparkSession, pages: DataFrame, output_path: str,
                     "with run_id= directories. Rewrite the old sink with "
                     ".partitionBy(..., 'run_id') or point output_path at "
                     "a fresh location")
-    todo = plan_todo(pages, done)
+    # partition by url BELOW the dedupe and anti-join: both reuse this
+    # exchange and extract_dataframe's identical repartition is planned
+    # away, so html crosses one shuffle. Keep this composition in step
+    # with tests/test_plans.py::test_run_extraction_html_crosses_one_exchange
+    todo = plan_todo(pages.repartition(opts.num_partitions, "url"), done)
     # run_id is the LAST partition level of every sink layout: the metrics
     # read-back below prunes to exactly this run's files at plan time
     # instead of scanning all historical output (Iceberg analog: the
